@@ -482,6 +482,13 @@ def fold_cosine_max(
     unique — the old groupBy(key) over the crossJoin was an identity
     grouping for unique keys).
     """
+    dims = {len(v) for v in bench_vecs}
+    if len(dims) != 1 or 0 in dims:
+        raise ValueError(
+            "fold_cosine_max: bench_vecs must be a non-empty block of "
+            f"equal-length vectors, got {len(bench_vecs)} of lengths "
+            f"{sorted(dims)}"
+        )
     bench = np.asarray(bench_vecs, dtype=np.float64)
     nb = np.zeros(bench.shape[0], dtype=np.float64)
     for j in range(bench.shape[1]):

@@ -167,10 +167,10 @@ ORDER BY pack_id
 # Scale: the decontamination stage adds one token-scale gram-hash
 # equi-join (SHUFFLED on the hash — both sides are corpus fractions,
 # so no broadcast hint; VERDICT r12 #1) and one id-keyed anti-join.
-# The gram side reads the map-side `gated` lineage (not `deduped`) so
-# the dedup window has exactly one consumer, and the post-anti-join
-# 3-column frame is pinned with a lazy localCheckpoint for the prefix
-# sum's two branches — the round-12 plan re-evaluated the whole
+# The gram side reads the `train` split (not `gated` or `deduped`), so
+# quality scoring stays off it and the dedup window has exactly one
+# consumer; the post-anti-join 3-column frame is pinned with a lazy
+# localCheckpoint for the prefix sum's two branches — the round-12 plan re-evaluated the whole
 # score->gate->dedup->decontam lineage 4x / scanned the corpus 8x
 # (VERDICT r12 #2). Per-execution cost now: one dedup exchange, one
 # gram-join shuffle, the prefix sum's __pid exchange over the pinned

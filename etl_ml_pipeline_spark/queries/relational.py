@@ -907,78 +907,6 @@ ORDER BY l_suppkey
 
 
 # ---------------------------------------------------------------------------
-# sketch_theta_audience_overlap — audience overlap via THETA sketches
-# (Datasketches, Spark 4.1 builtins): one theta sketch of user_id per
-# event type, then pairwise INTERSECTION / UNION estimates purely by
-# combining the 10 sketches — the mergeable-summary answer to "how many
-# users do segments A and B share". At 100 TB this is the only sane
-# shape: sketch once per segment in one pass (map-side mergeable
-# state), answer all O(|segments|^2) overlap questions WITHOUT
-# re-scanning or re-shuffling raw pairs. Theta (unlike HLL) supports
-# set intersection natively.
-#
-# Oracle pattern (same as agg_approx_distinct_parts): exact counts ride
-# along from an exact distinct pass, the sketch estimates fold into
-# error-contract BOOLEANS the oracle pins literally TRUE. Bounds
-# validated at sf0.01 (sketch exact below nominal entries) and sf1
-# (2.6% observed vs the 10%+16 / 5%+16 contracts).
-# ---------------------------------------------------------------------------
-
-
-def sketch_theta_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events").select("event_type", "user_id")
-    sk = ev.groupBy("event_type").agg(
-        F.theta_sketch_agg("user_id").alias("sk"),
-        F.countDistinct("user_id").alias("exact"),
-    )
-    a = sk.select(
-        F.col("event_type").alias("type_a"),
-        F.col("sk").alias("sk_a"),
-        F.col("exact").alias("exact_a"),
-    )
-    b = sk.select(
-        F.col("event_type").alias("type_b"),
-        F.col("sk").alias("sk_b"),
-        F.col("exact").alias("exact_b"),
-    )
-    d = ev.distinct()
-    exact_inter = (
-        d.alias("x")
-        .join(d.alias("y"), "user_id")
-        .filter(F.col("x.event_type") < F.col("y.event_type"))
-        .groupBy(
-            F.col("x.event_type").alias("type_a"),
-            F.col("y.event_type").alias("type_b"),
-        )
-        .agg(F.countDistinct("user_id").alias("exact_inter"))
-    )
-    est_i = F.theta_sketch_estimate(F.theta_intersection("sk_a", "sk_b"))
-    est_u = F.theta_sketch_estimate(F.theta_union("sk_a", "sk_b"))
-    exact_u = F.col("exact_a") + F.col("exact_b") - F.col("exact_inter")
-    return (
-        a.crossJoin(b)
-        .filter(F.col("type_a") < F.col("type_b"))
-        .join(exact_inter, ["type_a", "type_b"])
-        .select(
-            "type_a",
-            "type_b",
-            F.col("exact_a").cast("long").alias("exact_a"),
-            F.col("exact_b").cast("long").alias("exact_b"),
-            F.col("exact_inter").cast("long").alias("exact_inter"),
-            (
-                F.abs(est_i - F.col("exact_inter"))
-                <= F.greatest(F.lit(16.0), 0.10 * exact_u)
-            ).alias("inter_ok"),
-            (
-                F.abs(est_u - exact_u)
-                <= F.greatest(F.lit(16.0), 0.05 * exact_u)
-            ).alias("union_ok"),
-        )
-        .orderBy("type_a", "type_b")
-    )
-
-
-# ---------------------------------------------------------------------------
 # sketch_theta_overlap_matrix — the full pairwise error-contract AUDIT
 # of the theta-sketch overlap matrix (VERDICT r07 #7, made
 # hash-checkable in r13 per VERDICT r12 #4): the production leg
@@ -988,14 +916,13 @@ def sketch_theta_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
 # 10 sketches. Because raw theta estimates are not SQL-expressible,
 # the recordable output folds each estimate into an error-contract
 # BOOLEAN against an exact ride-along leg (the same oracle pattern as
-# agg_approx_distinct_parts / the twin below), so the driver's value
+# agg_approx_distinct_parts), so the driver's value
 # hash now pins all FOUR contracts per pair: each single-segment
 # estimate within max(16, 5%), the intersection within max(16, 10% of
 # the union), the union within max(16, 5%). A production deployment
 # drops the four *_ok audit columns and the exact legs fall out of the
 # select — the sketch subplan (ONE scan, broadcast T-row cross join)
-# is what runs daily at 100 TB. sketch_theta_audience_overlap below
-# stays the minimal 2-contract twin the earlier rounds recorded.
+# is what runs daily at 100 TB.
 # ---------------------------------------------------------------------------
 
 
@@ -1075,28 +1002,6 @@ inter AS (
 SELECT i.type_a, i.type_b, i.exact_inter,
        CAST(a.exact + b.exact - i.exact_inter AS BIGINT) AS exact_union,
        TRUE AS est_a_ok, TRUE AS est_b_ok,
-       TRUE AS inter_ok, TRUE AS union_ok
-FROM inter i
-JOIN per a ON a.event_type = i.type_a
-JOIN per b ON b.event_type = i.type_b
-ORDER BY i.type_a, i.type_b
-"""
-
-
-_THETA_OVERLAP_SQL = """
-WITH d AS (SELECT DISTINCT event_type, user_id FROM events),
-per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS exact FROM d GROUP BY 1
-),
-inter AS (
-  SELECT x.event_type AS type_a, y.event_type AS type_b,
-         CAST(count(DISTINCT x.user_id) AS BIGINT) AS exact_inter
-  FROM d x JOIN d y ON x.user_id = y.user_id
-                   AND x.event_type < y.event_type
-  GROUP BY 1, 2
-)
-SELECT i.type_a, i.type_b,
-       a.exact AS exact_a, b.exact AS exact_b, i.exact_inter,
        TRUE AS inter_ok, TRUE AS union_ok
 FROM inter i
 JOIN per a ON a.event_type = i.type_a
@@ -1982,7 +1887,6 @@ QUERIES = {
     "agg_stats_battery": agg_stats_battery,
     "agg_approx_percentile_prices": agg_approx_percentile_prices,
     "agg_approx_distinct_parts": agg_approx_distinct_parts,
-    "sketch_theta_audience_overlap": sketch_theta_audience_overlap,
     "sketch_theta_overlap_matrix": sketch_theta_overlap_matrix,
     "sketch_kll_price_quantiles": sketch_kll_price_quantiles,
     "q6_forecast_revenue": q6_forecast_revenue,
@@ -2025,7 +1929,6 @@ ORACLES = {
     "join_anti_inactive_customers": _ANTI_SQL,
     "agg_distinct_parts": _DISTINCT_SQL,
     "agg_approx_distinct_parts": _APPROX_DISTINCT_SQL,
-    "sketch_theta_audience_overlap": _THETA_OVERLAP_SQL,
     "sketch_theta_overlap_matrix": _THETA_MATRIX_SQL,
     "sketch_kll_price_quantiles": _KLL_SQL,
     "rollup_order_stats": _ROLLUP_SQL,

@@ -933,83 +933,10 @@ ORDER BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# multimodal_image_dedup — the decode -> dedup composition every image
-# corpus pipeline runs: synthesize real PNGs executor-side (modulo
-# space chosen so exact duplicates EXIST: w from d%4, h from d%3,
-# luma offset d%5 -> lcm 60 classes over 300 docs = 5 copies each),
-# decode through the real mapInPandas PNG path, then exact-dedup on
-# the decoded feature tuple (width, height, mean_luma) — group count +
-# canonical min doc_id. The oracle replays the analytic pixel stats,
-# so a decode bug ANYWHERE in the path breaks the group structure.
-# Scale: blobs stay in Arrow batches on executors; the dedup shuffles
-# only the small feature tuple.
-# ---------------------------------------------------------------------------
-
-
-def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd  # noqa: F401 — mapInPandas batch type
-
-    from etl_ml_pipeline_spark.operators.multimodal import (
-        decode_image_features,
-        encode_png,
-    )
-
-    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select("doc_id")
-
-    def gen_png(batches):
-        for pdf in batches:
-            media = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 1 + 2 * (d % 4), 1 + 2 * (d % 3)
-                px = (np.add.outer(np.arange(h), np.arange(w)) + d % 5).astype(
-                    np.uint8
-                )
-                media.append(encode_png(px, color_type=0))
-            pdf = pdf.copy()
-            pdf["media"] = media
-            yield pdf
-
-    with_media = docs.mapInPandas(gen_png, schema="doc_id: long, media: binary")
-    decoded = decode_image_features(with_media, "media", fake=False)
-    return (
-        decoded.select(
-            "doc_id",
-            F.col("img.width").alias("width"),
-            F.col("img.height").alias("height"),
-            F.col("img.mean_luma").alias("mean_luma"),
-        )
-        .groupBy("width", "height", "mean_luma")
-        .agg(
-            F.count("*").alias("n_copies"),
-            F.min("doc_id").alias("canonical_id"),
-        )
-        .orderBy("canonical_id")
-    )
-
-
-_IMAGE_DEDUP_SQL = """
-WITH feats AS (
-  SELECT doc_id,
-         CAST(1 + 2 * (doc_id % 4) AS INT) AS width,
-         CAST(1 + 2 * (doc_id % 3) AS INT) AS height,
-         ((doc_id % 5) + (doc_id % 4) + (doc_id % 3)) / 255.0 AS mean_luma
-  FROM documents WHERE doc_id < 300
-)
-SELECT width, height, mean_luma,
-       CAST(count(*) AS BIGINT) AS n_copies,
-       CAST(min(doc_id) AS BIGINT) AS canonical_id
-FROM feats
-GROUP BY 1, 2, 3
-ORDER BY canonical_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # multimodal_image_ahash_dedup — PERCEPTUAL near-dup on the decode
-# path: the same synthetic gradient images as multimodal_image_dedup,
-# but grouped by average-hash (8x8 nearest-neighbor downsample of the
+# path: synthetic gradient PNGs (w from d%4, h from d%3, luma offset
+# d%5 -> 60 exact classes over 300 docs), encoded and decoded for real,
+# then grouped by average-hash (8x8 nearest-neighbor downsample of the
 # REAL decoded luma grid, thresholded at the sample mean). aHash is
 # invariant to uniform brightness shifts, so the 5 luma-offset
 # variants that exact feature dedup keeps apart collapse into one
@@ -3515,7 +3442,6 @@ QUERIES = {
     "ann_ivf_sqrtn_topk": ann_ivf_sqrtn_topk,
     "multimodal_image_features": multimodal_image_features,
     "multimodal_png_decode": multimodal_png_decode,
-    "multimodal_image_dedup": multimodal_image_dedup,
     "multimodal_image_ahash_dedup": multimodal_image_ahash_dedup,
     "dedup_images_phash": dedup_images_phash,
     "dedup_audio_fingerprint": dedup_audio_fingerprint,
@@ -3551,7 +3477,6 @@ ORACLES = {
     "ann_ivf_sqrtn_topk": _IVF_SQRTN_SQL,
     "multimodal_image_features": _MULTIMODAL_SQL,
     "multimodal_png_decode": _PNG_DECODE_SQL,
-    "multimodal_image_dedup": _IMAGE_DEDUP_SQL,
     "multimodal_image_ahash_dedup": _AHASH_SQL,
     "dedup_images_phash": _PHASH_SQL,
     "dedup_audio_fingerprint": _AFP_SQL,

@@ -741,25 +741,6 @@ ORDER BY user_id
 
 
 # ---------------------------------------------------------------------------
-# stream_topk_replay — the streaming leaderboard: per event_type, the
-# top-5 users by cumulative value cents maintained as stateful state
-# (streaming/windows.stateful_topk, applyInPandasWithState UPDATE
-# mode), replayed over the bounded stream. The single micro-batch's
-# final emission must equal the batch groupBy + rank — same integer
-# cents (HALF_UP per event), same (total desc, user asc) tie order.
-# Scale: exact per-key member map while member cardinality is bounded;
-# the docstring names the SpaceSaving swap for open-world keys.
-# ---------------------------------------------------------------------------
-
-
-def stream_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_ml_pipeline_spark.streaming.windows import stateful_topk
-
-    board = stateful_topk(_events_stream(spark, sf_dir), k=5)
-    return _replay(board, "update", input_bytes=_events_bytes(sf_dir), python_state=True).orderBy("event_type", "rank")
-
-
-# ---------------------------------------------------------------------------
 # window_time_range_rolling — event-TIME range frame, not a row frame:
 # per user, the trailing-3600-second count and cent sum at every event
 # (RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW over epoch seconds).
@@ -805,26 +786,6 @@ FROM (
 WINDOW w AS (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
              RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
 ORDER BY user_id, event_id
-"""
-
-
-_STREAM_TOPK_SQL = """
-WITH totals AS (
-  SELECT event_type, user_id,
-         CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS total_cents
-  FROM events
-  GROUP BY 1, 2
-),
-ranked AS (
-  SELECT event_type, user_id, total_cents,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY total_cents DESC, user_id ASC) AS rank
-  FROM totals
-)
-SELECT event_type, CAST(rank AS INT) AS rank, user_id, total_cents
-FROM ranked
-WHERE rank <= 5
-ORDER BY event_type, rank
 """
 
 
@@ -1936,8 +1897,8 @@ ORDER BY user_id, n, evicted, total
 # top-5 members by CUMULATIVE cents — so the oracle re-derives every
 # emission as the top-5 over the batch PREFIX (totals through batch i,
 # ranked cents desc / member asc, emitted only for (key, batch) pairs
-# with data). The single-batch stream_topk_replay pins the final state;
-# this one pins the full cross-batch emission sequence — intermediate
+# with data). The last batch's emission pins the final state; the
+# earlier ones pin the cross-batch emission sequence — intermediate
 # leaderboards, rank churn, and the data-presence emission rule.
 # ---------------------------------------------------------------------------
 
@@ -2835,7 +2796,6 @@ QUERIES = {
     "stream_sessionize_replay": stream_sessionize_replay,
     "stream_tumble_replay": stream_tumble_replay,
     "stream_running_totals_replay": stream_running_totals_replay,
-    "stream_topk_replay": stream_topk_replay,
     "window_time_range_rolling": window_time_range_rolling,
     "stream_dedup_replay": stream_dedup_replay,
     "stream_dedup_index_replay": stream_dedup_index_replay,
@@ -2872,7 +2832,6 @@ ORACLES = {
     "stream_sessionize_replay": _STREAM_SESSIONIZE_SQL,
     "stream_tumble_replay": _STREAM_TUMBLE_SQL,
     "stream_running_totals_replay": _STREAM_TOTALS_SQL,
-    "stream_topk_replay": _STREAM_TOPK_SQL,
     "window_time_range_rolling": _TIME_RANGE_SQL,
     "stream_dedup_replay": _STREAM_DEDUP_SQL,
     "stream_dedup_index_replay": _dedup_index_oracle(),

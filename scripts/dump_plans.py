@@ -236,15 +236,8 @@ SHOWCASE = [
         "lands in one task.",
     ),
     (
-        "sketch_theta_audience_overlap",
-        "Mergeable theta sketches: one sketch aggregate per segment, "
-        "then ALL pairwise overlap estimates come from combining "
-        "segment-cardinality sketch rows — the raw (type,user) pairs "
-        "shuffle once; the exact-side check is the only distinct pass.",
-    ),
-    (
         "sketch_theta_overlap_matrix",
-        "The sketch-only PRODUCTION twin: ONE parquet scan (AQE reuses "
+        "The sketch-only PRODUCTION shape: ONE parquet scan (AQE reuses "
         "the sketch exchange for both join sides), map-side partial "
         "theta agg, broadcast NLJ over segment-count rows — no "
         "user-level join or distinct anywhere.",

@@ -6,10 +6,16 @@ tests/test_cli.py (VERDICT r07 ask #1). This check makes that drift a
 failed commit instead of a failed round. It is import-only (no Spark
 JVM, no JDBC) so it runs in a couple of seconds:
 
-1. live catalog size == the ``len(qs) == N`` pin in tests/test_cli.py;
+1. live catalog size == the ``len(qs) == N`` / ``len(oracles) == N`` pins
+   in tests/test_cli.py;
 2. CATALOG.md data-row count == live catalog size (and its names match);
 3. every query has an oracle entry or is a documented rows-only check;
-4. the emission-triage invariant (tiers non-decreasing) holds.
+4. every query has a green row in scripts/sf1_diff.json;
+5. the driver rotation holds: simulating the next MAX_STALE records from
+   the committed CORRECTNESS_r*.json files, with the emission order
+   queries() uses, leaves no name more than MAX_STALE rounds stale and
+   none never recorded (so the catalog fits MAX_STALE x PREFIX slots);
+6. README.md's "N named queries" line == live catalog size.
 
 Escape hatch for genuinely unrelated emergency commits:
 ``PRECOMMIT_SKIP=1 git commit ...``.
@@ -29,8 +35,8 @@ sys.path.insert(0, str(REPO))
 def fail(msg: str) -> None:
     print(f"precommit_check: FAIL — {msg}", file=sys.stderr)
     print(
-        "precommit_check: fix the catalog/pin/CATALOG.md together "
-        "(scripts/gen_catalog.py regenerates the doc), or bypass with "
+        "precommit_check: fix what the message names in the same commit "
+        "(scripts/gen_catalog.py regenerates CATALOG.md), or bypass with "
         "PRECOMMIT_SKIP=1 for an unrelated emergency commit.",
         file=sys.stderr,
     )
@@ -43,9 +49,12 @@ def main() -> None:
         return
 
     from etl_ml_pipeline_spark.queries import (
-        _LAST_RECORDED,
+        MAX_STALE,
+        PREFIX,
         all_oracles,
         all_queries,
+        emission_order,
+        last_recorded,
     )
 
     qs, oracles = all_queries(), all_oracles()
@@ -89,12 +98,7 @@ def main() -> None:
             f"ROWS_ONLY {sorted(ROWS_ONLY)}"
         )
 
-    # 4. triage order sanity
-    tiers = [_LAST_RECORDED.get(k, 0) for k in qs]
-    if tiers != sorted(tiers):
-        fail("emission triage order violated (tiers not non-decreasing)")
-
-    # 5. sf1-differential coverage (VERDICT r08 ask #2): every catalog
+    # 4. sf1-differential coverage: every catalog
     # query must have a row in scripts/sf1_diff.json. A new query
     # closes its gap incrementally with
     #   python scripts/sf1_diff.py --only NAME
@@ -121,38 +125,36 @@ def main() -> None:
             f"'python scripts/sf1_diff.py --only {','.join(sf1_red)}'"
         )
 
-    # 6. staleness contract (VERDICT r09 ask #4): simulate the next
-    # driver record — the first PREFIX names in emission order get a
-    # fresh row — then fail if any already-recorded name would end up
-    # >MAX_STALE rounds stale. The current round is inferred from the
-    # newest CORRECTNESS_r*.json on disk (the next record is round+1).
-    PREFIX, MAX_STALE = 50, 5
-    recorded_rounds = [
-        int(m.group(1))
-        for p in REPO.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", p.name))
-    ]
-    if recorded_rounds:
-        next_round = max(recorded_rounds) + 1
-        simulated = dict(_LAST_RECORDED)
-        for name in list(qs)[:PREFIX]:
+    # 5. staleness contract: replay the next
+    # MAX_STALE driver records (each takes the first PREFIX names of the
+    # emission order queries() uses) from the committed records. A name
+    # over the bound, or one still never recorded at the end, means the
+    # catalog does not fit the rotation.
+    simulated = last_recorded()
+    for _ in range(MAX_STALE):
+        next_round = max(simulated.values(), default=0) + 1
+        for name in emission_order(qs, simulated)[:PREFIX]:
             simulated[name] = next_round
         overdue = sorted(
-            (name, simulated[name])
+            name
             for name in qs
-            if simulated.get(name, 0) >= 1
-            and next_round - simulated[name] > MAX_STALE
+            if name in simulated and next_round - simulated[name] > MAX_STALE
         )
         if overdue:
             fail(
                 f"staleness contract broken: after the simulated round-"
                 f"{next_round} record ({PREFIX}-name prefix), these names "
-                f"exceed {MAX_STALE} rounds stale: {overdue} — refresh "
-                "_LAST_RECORDED from the latest CORRECTNESS json and/or "
-                "reorder the prefix"
+                f"exceed {MAX_STALE} rounds stale: {overdue}"
             )
+    never = sorted(set(qs) - set(simulated))
+    if never:
+        fail(
+            f"{len(qs)} queries do not fit {MAX_STALE} records of {PREFIX} "
+            f"names: {never} would still be unrecorded after round "
+            f"{next_round} — retire or merge queries"
+        )
 
-    # 7. README catalog-count pin (VERDICT r13 ask #3): README.md's
+    # 6. README catalog-count pin: README.md's
     # "N named queries" line must match the live catalog so the first
     # doc a reader opens can never drift again (it said 237 at 239).
     readme = (REPO / "README.md").read_text()
@@ -168,7 +170,9 @@ def main() -> None:
 
     print(
         f"precommit_check: OK — catalog {len(qs)} queries, pin + "
-        "CATALOG.md + oracles + staleness + README consistent"
+        "CATALOG.md + oracles + sf1 + README consistent; simulated "
+        f"records through round {next_round}: none over {MAX_STALE} "
+        "rounds stale, none unrecorded"
     )
 
 

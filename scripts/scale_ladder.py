@@ -79,15 +79,14 @@ QUERIES = [
     "multimodal_image_ahash_dedup",
     "window_time_range_rolling",
     "boilerplate_strip_documents",
-    "stream_topk_replay",
+    "stream_topk_multibatch_replay",
     # round-7 additions: cluster-bounded semantic dedup (capped slice —
     # expect flat), DSIR weighting, sweep-line concurrency, RFM grid,
-    # theta-sketch overlap, exact-allocation sampling, BPE round-trip
+    # exact-allocation sampling, BPE round-trip
     "dedup_semantic_clusters",
     "sample_dsir_weights",
     "concurrency_peak_events",
     "rfm_segmentation_events",
-    "sketch_theta_audience_overlap",
     "sample_exact_allocation",
     "text_bpe_roundtrip",
     # round-8 additions: repeated-window (ExactSubstr-style) dedup,

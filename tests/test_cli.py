@@ -137,8 +137,8 @@ def test_query_catalog_counts():
     from etl_ml_pipeline_spark.queries import all_oracles, all_queries
 
     qs, oracles = all_queries(), all_oracles()
-    assert len(qs) == 253, sorted(qs)
-    assert len(oracles) == 253, sorted(oracles)
+    assert len(qs) == 250, sorted(qs)
+    assert len(oracles) == 250, sorted(oracles)
     # every catalog entry is oracle-checkable except the documented
     # rows-only set (non-SQL-expressible outputs — e.g. raw theta-sketch
     # estimates — each paired with an oracle-checked contract twin)
@@ -156,40 +156,31 @@ def test_query_catalog_counts():
 
 
 def test_query_emission_triage_order():
-    """The driver records only a ~50-entry wall-clock prefix of queries()
-    in emission order, so emission is triaged oldest-driver-record
-    first. Round 15 is the saturated case: the oldest tier is the FULL
-    50-name r10 cohort (the r14 prefix had no room for the refreshes
-    ROADMAP budgeted), so the prefix must be exactly those 50 names and
-    round-15 additions are pinned at tier 10.5 — behind the whole r10
-    cohort, ahead of the 50 r11 names that come due at r16."""
+    """The driver records only the first PREFIX names of queries() each
+    round, so emission is triage derived from the committed
+    CORRECTNESS_r*.json records: names the next record must take to stay
+    within MAX_STALE rounds first, then never-recorded names, then the
+    rest oldest first, stable within each group."""
     from etl_ml_pipeline_spark.queries import (
-        _ADDED_R15,
-        _LAST_RECORDED,
+        MAX_STALE,
         all_queries,
+        emission_order,
+        last_recorded,
     )
 
+    # the next record is round 11: "due" (r5) and "late" (r4) would be
+    # over the bound if it skipped them, "edge" (r6) would sit exactly at it
+    recorded = {"late": 4, "due": 5, "edge": 6, "old": 7, "fresh": 10}
+    names = ["fresh", "new_a", "due", "old", "edge", "new_b", "late"]
+    assert 11 - recorded["edge"] == MAX_STALE
+    assert emission_order(names, recorded) == [
+        "late", "due", "new_a", "new_b", "edge", "old", "fresh"
+    ]
+    # no records at all: everything is never-recorded, catalog order kept
+    assert emission_order(names, {}) == names
+
     keys = list(all_queries())
-    tier = lambda k: _LAST_RECORDED.get(k, 0)
-    tiers = [tier(k) for k in keys]
-    assert tiers == sorted(tiers)
-    # nothing may sort ahead of the r10 cohort: every catalog name has
-    # an explicit tier >= 10 (a forgotten pin would default to 0 and
-    # steal a prefix slot from a name at the staleness bound)
-    assert min(tiers) == 10
-    # the 50 r10-era names fill the 50-slot prefix exactly
-    r10 = [k for k in keys if tier(k) == 10]
-    assert len(r10) == 50
-    assert keys[:50] == r10
-    # round-15 additions ride at 10.5, directly behind the cohort, so
-    # they lead the first free slot (r17, when the 49-name r12 tier
-    # comes due) without displacing anything at the bound
-    added = [k for k in keys if tier(k) == 10.5]
-    assert sorted(added) == sorted(_ADDED_R15)
-    assert keys[50 : 50 + len(added)] == added
-    assert _LAST_RECORDED.get(keys[-1]) == 14
-    # every triage name must still exist in the catalog (no stale entries)
-    assert set(_LAST_RECORDED) <= set(keys)
+    assert keys == emission_order(keys, last_recorded())
 
 
 def test_list_modules_surfaces_unavailable(monkeypatch):

@@ -74,3 +74,8 @@ def test_fold_cosine_max_bit_identical(spark, vec_frames):
     # the identical-vector artifact must be preserved, not clamped
     row0 = kern.loc[kern["c_id"] == 0, "max_cos"].iloc[0]
     assert row0 >= 1.0
+    # an empty or ragged block is refused up front, not at shape[1]
+    keep = [("c_id", "long")]
+    for bad in ([], [list(bench[0]), list(bench[1])[:-1]]):
+        with pytest.raises(ValueError, match="equal-length"):
+            fold_cosine_max(cdf, bad, "cv", "max_cos", keep)
